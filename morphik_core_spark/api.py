@@ -20,24 +20,41 @@ Storage: ``<root>/documents`` and ``<root>/chunks`` parquet snapshots.
 Mutations rewrite the snapshot relationally (docstore ops); at scale the
 writer targets affected partitions only — the logic is identical.
 
+Each table is resolved once per on-disk snapshot: ``documents()`` and
+``chunks()`` read with the declared schemas (no schema-inference job) and
+hand back the same DataFrame while the table directory's fingerprint —
+relative path, size and mtime of every file — is unchanged. Any write
+changes it: this facade's rewrites, a Spark append from outside, a second
+facade on the same root. Retrieval scores against a serving frame per
+chunks snapshot: the chunks plus a cached ``embedding_norm`` column,
+unpersisted when a new snapshot supersedes it or the facade is dropped,
+so each request pays one dot-product pass per chunk. The documents
+snapshot's row count, read from parquet footers on the driver, stands in
+for the broadcast probe. Every facade caches its own frames; two facades
+on one root share files, not caches.
+
 The embedder defaults to the seeded hash embedder; production embedders
 (LiteLLM dense / ColPali) plug in via the same (text→vector, UDF) pair.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import uuid
+import weakref
 from datetime import UTC, datetime
 from typing import Any, Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructType
 
 from morphik_core_spark.functions.chunking import chunk_documents
 from morphik_core_spark.functions.embedder import hash_embed, hash_embed_udf
 from morphik_core_spark.functions.text import clean_control_chars
+from morphik_core_spark.functions.vectors import l2_norm
 from morphik_core_spark.operators import docstore, listing, rag, retrieval
 from morphik_core_spark.operators.metadata_filters import MetadataFilterCompiler
 from morphik_core_spark.operators.rerank import make_reranker
@@ -56,6 +73,68 @@ _CHUNKS_SCHEMA = (
     "document_id string, chunk_number int, content string, embedding array<double>, "
     "app_id string, folder_path string"
 )
+# the serving frame's cached l2_norm(embedding); never returned to callers
+_NORM_COL = "embedding_norm"
+
+
+@functools.cache
+def _struct(ddl: str) -> StructType:
+    return DataType.fromDDL(ddl)
+
+
+def _fingerprint(path: str) -> tuple | None:
+    """Sorted (relative path, size, mtime_ns) of every file under a table
+    directory; None when the table does not exist. Every write adds,
+    removes or rewrites a file (Spark names each part file per write job),
+    so an equal fingerprint means the same snapshot."""
+    if not os.path.exists(path):
+        return None
+    out = []
+    for dirpath, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(dirpath, f)
+            try:
+                st = os.stat(full)
+            except OSError:  # removed mid-walk by a concurrent write
+                continue
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+class _Snapshot:
+    """One resolved read of a table, valid while its fingerprint holds."""
+
+    def __init__(self, path: str, fingerprint: tuple | None, frame: DataFrame) -> None:
+        self.path = path
+        self.fingerprint = fingerprint
+        self.frame = frame
+        self._rows: int | None = None
+
+    def rows(self) -> int | None:
+        """Row count summed from the parquet footers on the driver (no
+        Spark job); None when a footer cannot be read."""
+        if self.fingerprint is None:
+            return 0
+        if self._rows is None:
+            import pyarrow.parquet as pq
+
+            # Spark's rule: names starting with _ or . are not data
+            data = [
+                rel for rel, _size, _mtime in self.fingerprint
+                if not any(part[:1] in ("_", ".") for part in rel.split(os.sep))
+            ]
+            try:
+                self._rows = sum(pq.read_metadata(os.path.join(self.path, rel)).num_rows for rel in data)
+            except (OSError, ValueError):  # gone mid-read, or not parquet: the probe decides
+                return None
+        return self._rows
+
+
+def _unpersist(frame: DataFrame) -> None:
+    try:
+        frame.unpersist()
+    except Exception:  # noqa: BLE001 — a stopped session has nothing cached
+        pass
 
 
 class MorphikSpark:
@@ -98,30 +177,51 @@ class MorphikSpark:
         # None = text-only deployment, download_url stays null.
         self._storage = storage
         self._compiler = MetadataFilterCompiler()
+        self._snapshots: dict[str, _Snapshot] = {}
+        # (chunks frame it was built from, serving frame, its release)
+        self._serving: tuple[DataFrame, DataFrame, weakref.finalize] | None = None
 
     # ------------------------------------------------------------- tables
 
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
+    def _snapshot(self, name: str, ddl: str) -> _Snapshot:
+        path = self._path(name)
+        fp = _fingerprint(path)
+        snap = self._snapshots.get(name)
+        if snap is None or snap.fingerprint != fp:
+            schema = _struct(ddl)
+            if fp is None:
+                frame = self.spark.createDataFrame([], schema)
+            else:
+                # the declared schema skips inference (a Spark job per
+                # read) and types a partition column whose only value is
+                # NULL; the select restores schema order, since parquet
+                # reads append partition columns at the end
+                frame = self.spark.read.schema(schema).parquet(path).select(*schema.fieldNames())
+            snap = self._snapshots[name] = _Snapshot(path, fp, frame)
+        return snap
+
     def documents(self) -> DataFrame:
-        p = self._path("documents")
-        if not os.path.exists(p):
-            return self.spark.createDataFrame([], _DOCS_SCHEMA)
-        # the table is partitioned by app_id (tenant pruning + partition-
-        # granularity upserts); re-select in schema order since parquet
-        # reads append partition columns at the end, and CAST each column:
-        # a table whose only partition value is NULL infers the partition
-        # column as VOID, which poisons later partitioned writes
-        schema = self.spark.createDataFrame([], _DOCS_SCHEMA).schema
-        df = self.spark.read.parquet(p)
-        return df.select(*[F.col(f.name).cast(f.dataType) for f in schema.fields])
+        return self._snapshot("documents", _DOCS_SCHEMA).frame
 
     def chunks(self) -> DataFrame:
-        p = self._path("chunks")
-        if not os.path.exists(p):
-            return self.spark.createDataFrame([], _CHUNKS_SCHEMA)
-        return self.spark.read.parquet(p)
+        return self._snapshot("chunks", _CHUNKS_SCHEMA).frame
+
+    def _serving_chunks(self) -> DataFrame:
+        """The current chunks snapshot plus a cached ``embedding_norm``
+        column. The superseded frame is unpersisted when a new snapshot
+        replaces it, and the live one when the facade is collected."""
+        chunks = self.chunks()
+        if self._serving is None or self._serving[0] is not chunks:
+            if self._serving is not None:
+                self._serving[2]()
+            frame = chunks.withColumn(_NORM_COL, l2_norm(F.col("embedding"))).cache()
+            release = weakref.finalize(self, _unpersist, frame)
+            release.atexit = False
+            self._serving = (chunks, frame, release)
+        return self._serving[1]
 
     def _write_documents(self, df: DataFrame) -> None:
         self._overwrite(df, "documents", _DOCS_SCHEMA, partition_by="app_id")
@@ -603,26 +703,33 @@ class MorphikSpark:
             )
         else:
             reranker = None
+        docs = self._snapshot("documents", _DOCS_SCHEMA)
+        serving = self._serving_chunks()
         hits = retrieval.retrieve_chunks(
-            self.documents(),
-            self.chunks(),
+            docs.frame,
+            serving,
             qv,
             k=k,
             auth=auth,
             filters=filters,
             system_filters=system_filters or None,
             reranker=reranker,
+            norm_col=_NORM_COL,
+            auth_rows_hint=docs.rows(),
+            compiler=self._compiler,
         )
         if padding > 0:
             matches = hits.select("document_id", "chunk_number")
             hits = retrieval.with_padding(
-                hits.select("document_id", "chunk_number", "score"), self.chunks(), padding
+                hits.select("document_id", "chunk_number", "score"), serving, padding
             )
             # is_padding = key ∉ original matches (document_service.py:715),
             # flagged relationally — score==0.0 alone is not the contract
             hits = docstore.grouped_response(hits, matches)
+        # served rows carry no vectors (the reference's ChunkResult has none)
+        hits = hits.drop("embedding", _NORM_COL)
         # hydration join (§2.3): attach document fields to chunk results
-        doc_meta = self.documents().select(
+        doc_meta = docs.frame.select(
             F.col("external_id").alias("document_id"), "filename", "metadata", "content_type"
         )
         return hits.join(F.broadcast(doc_meta), "document_id", "left")
@@ -934,23 +1041,13 @@ class MorphikSpark:
 
     def _tables_signature(self) -> str:
         """Content signature of the tables the term graph derives from
-        (chunks for edges, documents for the auth scope set). Local
-        warehouse: max (mtime_ns, size) over both table trees — every
-        mutation path rewrites files, so any ingest/update/delete moves
-        it. On a table format (Delta/Iceberg) this is the snapshot id."""
-        sig = 0
-        for name in ("chunks", "documents"):
-            root = self._path(name)
-            if not os.path.exists(root):
-                continue
-            for dirpath, _dirs, files in os.walk(root):
-                for f in files:
-                    try:
-                        st = os.stat(os.path.join(dirpath, f))
-                        sig = max(sig, st.st_mtime_ns + st.st_size)
-                    except OSError:
-                        pass
-        return str(sig)
+        (chunks for edges, documents for the auth scope set): a digest of
+        both table fingerprints, so any ingest/update/delete moves it. On
+        a table format (Delta/Iceberg) this is the snapshot id."""
+        import hashlib
+
+        fps = [_fingerprint(self._path(name)) for name in ("chunks", "documents")]
+        return hashlib.sha256(repr(fps).encode()).hexdigest()
 
     def build_term_graph(
         self,

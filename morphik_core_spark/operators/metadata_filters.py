@@ -42,10 +42,13 @@ Documented deviations from the reference:
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
 from datetime import date, datetime
 from decimal import Decimal, InvalidOperation
 from typing import Any, Callable
 
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -59,6 +62,9 @@ class InvalidMetadataFilterError(ValueError):
 
 
 _DECIMAL_TYPE = "decimal(38,12)"
+
+# compiled predicates a compiler remembers (least recently used evicted)
+_COMPILED_CAPACITY = 256
 
 # schema_of_variant() → canonical metadata type (jsonb_typeof analog).
 _NUMERIC_SCHEMA_PREFIXES = ("TINYINT", "SMALLINT", "INT", "BIGINT", "FLOAT", "DOUBLE", "DECIMAL")
@@ -111,6 +117,13 @@ class MetadataFilterCompiler:
         self._types_kind = types_kind
         self._metadata_kind = metadata_kind
         self._column_fields = column_fields if column_fields is not None else {"filename": "filename"}
+        # a compile is ~70 ms of py4j round trips; serving repeats the same
+        # few filters, so recent results are kept per compiler, keyed by
+        # _filter_key. Columns belong to one SparkContext: a new one
+        # empties the store.
+        self._compiled: OrderedDict[tuple, Column] = OrderedDict()
+        self._compiled_sc: SparkContext | None = None
+        self._compiled_lock = threading.Lock()
 
     # Column objects need an active session; build them lazily per use.
     @property
@@ -133,7 +146,26 @@ class MetadataFilterCompiler:
             raise InvalidMetadataFilterError("Metadata filters must be provided as a JSON object.")
         if not filters:
             return F.lit(True)
-        return self._expr(filters, context="metadata filter")
+        key = _filter_key(filters)
+        if key is None:
+            return self._expr(filters, context="metadata filter")
+        sc = SparkContext._active_spark_context
+        with self._compiled_lock:
+            if sc is not self._compiled_sc:
+                self._compiled.clear()
+                self._compiled_sc = sc
+            hit = self._compiled.get(key)
+            if hit is not None:
+                self._compiled.move_to_end(key)
+                return hit
+        # invalid filters raise here, so they are never remembered
+        compiled = self._expr(filters, context="metadata filter")
+        with self._compiled_lock:
+            if sc is self._compiled_sc:
+                self._compiled[key] = compiled
+                if len(self._compiled) > _COMPILED_CAPACITY:
+                    self._compiled.popitem(last=False)
+        return compiled
 
     # ------------------------------------------------------------ tree walk
 
@@ -544,6 +576,40 @@ _COMPARATORS: dict[str, Callable[[Column, Column], Column]] = {
     "$lt": lambda a, b: a < b,
     "$lte": lambda a, b: a <= b,
 }
+
+
+def _filter_key(value: Any) -> tuple | None:
+    """Canonical, type-preserving rendering of a filter value: ``1``,
+    ``1.0``, ``True``, ``"1"``, a date, a datetime and a ``Decimal`` all
+    render differently, and dict keys are sorted (clauses of one object
+    are ANDed, so their order does not change the predicate). None when
+    the value holds a type not rendered here (a tuple, a subclass, a numpy
+    scalar): such a filter is compiled afresh every time."""
+    t = type(value)
+    if t is dict:
+        items = []
+        for k, v in value.items():
+            kk, vv = _filter_key(k), _filter_key(v)
+            if kk is None or vv is None:
+                return None
+            items.append((kk, vv))
+        return ("dict", tuple(sorted(items, key=repr)))
+    if t is list:
+        items = [_filter_key(v) for v in value]
+        return None if any(i is None for i in items) else ("list", tuple(items))
+    if value is None:
+        return ("null",)
+    if t in (bool, int, str):
+        return (t.__name__, value)
+    if t is float:
+        return ("float", value.hex())
+    if t is Decimal:
+        return ("decimal", str(value))
+    if t is datetime:
+        return ("datetime", value.isoformat(), repr(value.tzinfo))
+    if t is date:
+        return ("date", value.isoformat())
+    return None
 
 
 def compile_filters(

@@ -35,7 +35,7 @@ from typing import Any, Callable, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from morphik_core_spark.functions.vectors import retrieval_score
+from morphik_core_spark.functions.vectors import retrieval_score, vector_literal, vector_norm
 from morphik_core_spark.operators.metadata_filters import MetadataFilterCompiler
 from morphik_core_spark.operators.scopes import (
     AuthContext,
@@ -103,9 +103,10 @@ def scoped_chunks(
     semi-join shuffles on ``doc_col`` and AQE stays free to re-plan from real
     runtime sizes. ``broadcast_threshold=None`` skips the probe and forces
     the broadcast (callers that know the set is tiny by construction).
-    ``auth_rows_hint`` (from persisted `plans/stats` manifests) answers
-    the gate without running the probe — the cluster path, where stats
-    are computed once per snapshot instead of one probe per query.
+    ``auth_rows_hint`` (from persisted `plans/stats` manifests, or the
+    facade's documents-snapshot row count, an upper bound on the set)
+    answers the gate without running the probe — stats are computed once
+    per snapshot instead of one probe per query.
     """
     if broadcast_threshold is None:
         small = True
@@ -118,11 +119,22 @@ def scoped_chunks(
     return chunks.join(auth_docs, on=doc_col, how="left_semi")
 
 
-def score_chunks(chunks: DataFrame, query_vector: Sequence[float], embedding_col: str = "embedding") -> DataFrame:
-    """Attach the reference retrieval score (1 − cos_dist/2) vs a query vector."""
-    q = F.lit(list(float(x) for x in query_vector)).cast("array<double>")
+def score_chunks(
+    chunks: DataFrame,
+    query_vector: Sequence[float],
+    embedding_col: str = "embedding",
+    norm_col: str | None = None,
+) -> DataFrame:
+    """Attach the reference retrieval score (1 − cos_dist/2) vs a query vector.
+
+    The query is one array literal and its norm a driver-side constant;
+    ``norm_col`` names a stored ``l2_norm(embedding)`` column (the facade's
+    serving frame carries one), leaving one dot-product pass per row.
+    Scores are bit-identical to ``retrieval_score(emb, lit(q))``."""
     emb = F.col(embedding_col).cast("array<double>")
-    return chunks.withColumn("score", retrieval_score(emb, q))
+    norm = F.col(norm_col) if norm_col is not None else None
+    score = retrieval_score(emb, vector_literal(query_vector), norm, F.lit(vector_norm(query_vector)))
+    return chunks.withColumn("score", score)
 
 
 def top_k(df: DataFrame, k: int, score_col: str = "score", tiebreak: Sequence[str] = ()) -> DataFrame:
@@ -152,14 +164,20 @@ def retrieve_chunks(
     reranker: Callable[[DataFrame], DataFrame] | None = None,
     embedding_col: str = "embedding",
     tiebreak: Sequence[str] = ("document_id", "chunk_number"),
+    norm_col: str | None = None,
+    auth_rows_hint: int | None = None,
+    compiler: MetadataFilterCompiler | None = None,
 ) -> DataFrame:
     """End-to-end filtered vector top-k (the reference's /retrieve/chunks).
 
     With a reranker: oversample → rescore → cut to k, mirroring
-    document_service.py:386-466.
+    document_service.py:386-466. ``norm_col`` and ``auth_rows_hint`` pass
+    through to `score_chunks` and `scoped_chunks`.
     """
-    auth_docs = authorized_documents(documents, auth, filters, system_filters, status_filter)
-    candidates = score_chunks(scoped_chunks(chunks, auth_docs), query_vector, embedding_col)
+    auth_docs = authorized_documents(documents, auth, filters, system_filters, status_filter, compiler)
+    candidates = score_chunks(
+        scoped_chunks(chunks, auth_docs, auth_rows_hint=auth_rows_hint), query_vector, embedding_col, norm_col
+    )
     if reranker is None:
         return top_k(candidates, k, tiebreak=tiebreak)
     shortlist = top_k(candidates, rerank_oversample_size(k), tiebreak=tiebreak)

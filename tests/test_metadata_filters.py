@@ -303,3 +303,67 @@ def test_variant_compiler_agrees_with_json(docs, filters):
         for r in vdocs.filter(VARIANT_COMPILER.compile(filters)).select("external_id").collect()
     }
     assert var_ids == json_ids
+
+
+# ------------------------------------------------------- compile memo
+
+
+def _ids(docs, col):
+    return {r.external_id for r in docs.filter(col).select("external_id").collect()}
+
+
+def test_compile_memo_returns_the_remembered_predicate(docs):
+    c = MetadataFilterCompiler()
+    first = c.compile({"department": "eng", "priority": {"$gte": 3}})
+    # clauses of one object are ANDed: key order does not change the key
+    assert c.compile({"priority": {"$gte": 3}, "department": "eng"}) is first
+    assert _ids(docs, first) == matched(docs, {"department": "eng", "priority": {"$gte": 3}})
+
+
+def test_compile_memo_keys_preserve_types():
+    from datetime import date, datetime, timezone
+    from decimal import Decimal
+
+    from morphik_core_spark.operators.metadata_filters import _filter_key
+
+    operands = [
+        1, 1.0, True, "1", None, 0.0, -0.0,
+        Decimal("1"), Decimal("1.0"),
+        date(2024, 6, 1), datetime(2024, 6, 1), datetime(2024, 6, 1, tzinfo=timezone.utc),
+        [1], ["1"], {"a": 1}, {"a": True},
+    ]
+    keys = [_filter_key({"f": v}) for v in operands]
+    assert None not in keys
+    assert len(set(keys)) == len(operands)
+    assert _filter_key({"f": (1,)}) is None  # unrendered type: never remembered
+
+
+def test_compile_memo_keeps_typed_answers_apart(docs):
+    """Interleaved compiles of look-alike operands answer exactly as a
+    fresh compiler does: 3 (number) vs "3" (string), True vs 1."""
+    c = MetadataFilterCompiler()
+    cases = [{"priority": 3}, {"priority": "3"}, {"active": True}, {"active": 1}, {"priority": 3.0}]
+    for _ in range(2):
+        for f in cases:
+            assert _ids(docs, c.compile(f)) == _ids(docs, MetadataFilterCompiler().compile(f))
+    assert _ids(docs, c.compile({"priority": 3})) != _ids(docs, c.compile({"priority": "3"}))
+    assert _ids(docs, c.compile({"active": True})) != _ids(docs, c.compile({"active": 1}))
+
+
+@pytest.mark.parametrize("bad", [{"$and": []}, {"field": {"$bogus": 1}}, {"field": {"$in": "notalist"}}])
+def test_invalid_filters_raise_on_every_call(bad):
+    c = MetadataFilterCompiler()
+    for _ in range(3):
+        with pytest.raises(InvalidMetadataFilterError):
+            c.compile(bad)
+
+
+def test_compile_memo_is_bounded(spark):
+    from morphik_core_spark.operators.metadata_filters import _COMPILED_CAPACITY
+
+    c = MetadataFilterCompiler()
+    for i in range(_COMPILED_CAPACITY + 20):
+        c.compile({"n": i})
+    assert len(c._compiled) == _COMPILED_CAPACITY
+    first = c.compile({"n": 0})  # evicted: compiled afresh, then remembered
+    assert c.compile({"n": 0}) is first
