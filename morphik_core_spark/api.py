@@ -29,9 +29,13 @@ facade on the same root. Retrieval scores against a serving frame per
 chunks snapshot: the chunks plus a cached ``embedding_norm`` column,
 unpersisted when a new snapshot supersedes it or the facade is dropped,
 so each request pays one dot-product pass per chunk. The documents
-snapshot's row count, read from parquet footers on the driver, stands in
-for the broadcast probe. Every facade caches its own frames; two facades
-on one root share files, not caches.
+snapshot's row count, read from parquet footers on the driver, bounds the
+authorized set from above and replaces the broadcast probe while it is at
+or below the threshold. Spark's cache is session-wide and matches a
+cached plan by its table path, not its file listing, so facades on one
+session and root share the cached serving frame. A facade that reads a
+new snapshot therefore refreshes every plan cached over that path first
+(``refreshByPath``), and no facade adopts a cache of an older snapshot.
 
 The embedder defaults to the seeded hash embedder; production embedders
 (LiteLLM dense / ColPali) plug in via the same (text→vector, UDF) pair.
@@ -101,6 +105,13 @@ def _fingerprint(path: str) -> tuple | None:
     return tuple(sorted(out))
 
 
+def _unpersist(frame: DataFrame) -> None:
+    try:
+        frame.unpersist()
+    except Exception:  # noqa: BLE001 — a stopped session has nothing cached
+        pass
+
+
 class _Snapshot:
     """One resolved read of a table, valid while its fingerprint holds."""
 
@@ -109,6 +120,8 @@ class _Snapshot:
         self.fingerprint = fingerprint
         self.frame = frame
         self._rows: int | None = None
+        self._serving: DataFrame | None = None
+        self._release: weakref.finalize | None = None
 
     def rows(self) -> int | None:
         """Row count summed from the parquet footers on the driver (no
@@ -129,12 +142,19 @@ class _Snapshot:
                 return None
         return self._rows
 
+    def serving(self) -> DataFrame:
+        """The frame plus a cached ``embedding_norm`` column, built on
+        first use and unpersisted by `release` or when the snapshot is
+        collected, whichever comes first."""
+        if self._serving is None:
+            self._serving = self.frame.withColumn(_NORM_COL, l2_norm(F.col("embedding"))).cache()
+            self._release = weakref.finalize(self, _unpersist, self._serving)
+            self._release.atexit = False
+        return self._serving
 
-def _unpersist(frame: DataFrame) -> None:
-    try:
-        frame.unpersist()
-    except Exception:  # noqa: BLE001 — a stopped session has nothing cached
-        pass
+    def release(self) -> None:
+        if self._release is not None:
+            self._release()  # a finalize runs at most once
 
 
 class MorphikSpark:
@@ -178,8 +198,6 @@ class MorphikSpark:
         self._storage = storage
         self._compiler = MetadataFilterCompiler()
         self._snapshots: dict[str, _Snapshot] = {}
-        # (chunks frame it was built from, serving frame, its release)
-        self._serving: tuple[DataFrame, DataFrame, weakref.finalize] | None = None
 
     # ------------------------------------------------------------- tables
 
@@ -191,10 +209,17 @@ class MorphikSpark:
         fp = _fingerprint(path)
         snap = self._snapshots.get(name)
         if snap is None or snap.fingerprint != fp:
+            if snap is not None:
+                snap.release()
             schema = _struct(ddl)
             if fp is None:
                 frame = self.spark.createDataFrame([], schema)
             else:
+                # Spark's cache is session-wide and matches a cached plan
+                # by its table path, not its file listing: re-list every
+                # plan cached over this path (another facade's, a user's)
+                # so none of an older snapshot is adopted by this one
+                self.spark.catalog.refreshByPath(path)
                 # the declared schema skips inference (a Spark job per
                 # read) and types a partition column whose only value is
                 # NULL; the select restores schema order, since parquet
@@ -211,17 +236,8 @@ class MorphikSpark:
 
     def _serving_chunks(self) -> DataFrame:
         """The current chunks snapshot plus a cached ``embedding_norm``
-        column. The superseded frame is unpersisted when a new snapshot
-        replaces it, and the live one when the facade is collected."""
-        chunks = self.chunks()
-        if self._serving is None or self._serving[0] is not chunks:
-            if self._serving is not None:
-                self._serving[2]()
-            frame = chunks.withColumn(_NORM_COL, l2_norm(F.col("embedding"))).cache()
-            release = weakref.finalize(self, _unpersist, frame)
-            release.atexit = False
-            self._serving = (chunks, frame, release)
-        return self._serving[1]
+        column (`_Snapshot.serving`)."""
+        return self._snapshot("chunks", _CHUNKS_SCHEMA).serving()
 
     def _write_documents(self, df: DataFrame) -> None:
         self._overwrite(df, "documents", _DOCS_SCHEMA, partition_by="app_id")
@@ -715,7 +731,7 @@ class MorphikSpark:
             system_filters=system_filters or None,
             reranker=reranker,
             norm_col=_NORM_COL,
-            auth_rows_hint=docs.rows(),
+            auth_rows_bound=docs.rows(),
             compiler=self._compiler,
         )
         if padding > 0:

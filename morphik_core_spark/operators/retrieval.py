@@ -88,6 +88,7 @@ def scoped_chunks(
     doc_col: str = "document_id",
     broadcast_threshold: int | None = 1_000_000,
     auth_rows_hint: int | None = None,
+    auth_rows_bound: int | None = None,
 ) -> DataFrame:
     """Restrict the chunks fact table to authorized documents
     (pgvector_store.py:469-471 ``WHERE document_id IN``).
@@ -103,15 +104,20 @@ def scoped_chunks(
     semi-join shuffles on ``doc_col`` and AQE stays free to re-plan from real
     runtime sizes. ``broadcast_threshold=None`` skips the probe and forces
     the broadcast (callers that know the set is tiny by construction).
-    ``auth_rows_hint`` (from persisted `plans/stats` manifests, or the
-    facade's documents-snapshot row count, an upper bound on the set)
-    answers the gate without running the probe — stats are computed once
-    per snapshot instead of one probe per query.
+    ``auth_rows_hint`` (from persisted `plans/stats` manifests) answers
+    the gate without running the probe — the cluster path, where stats
+    are computed once per snapshot instead of one probe per query.
+    ``auth_rows_bound`` is an upper bound on the set (the facade's
+    documents-snapshot row count): at or below the threshold it answers
+    "small" with no probe; above it the probe still decides, since a
+    small tenant in a large table must keep its broadcast.
     """
     if broadcast_threshold is None:
         small = True
     elif auth_rows_hint is not None:
         small = auth_rows_hint <= broadcast_threshold
+    elif auth_rows_bound is not None and auth_rows_bound <= broadcast_threshold:
+        small = True
     else:
         small = auth_docs.limit(broadcast_threshold + 1).count() <= broadcast_threshold
     if small:
@@ -165,18 +171,18 @@ def retrieve_chunks(
     embedding_col: str = "embedding",
     tiebreak: Sequence[str] = ("document_id", "chunk_number"),
     norm_col: str | None = None,
-    auth_rows_hint: int | None = None,
+    auth_rows_bound: int | None = None,
     compiler: MetadataFilterCompiler | None = None,
 ) -> DataFrame:
     """End-to-end filtered vector top-k (the reference's /retrieve/chunks).
 
     With a reranker: oversample → rescore → cut to k, mirroring
-    document_service.py:386-466. ``norm_col`` and ``auth_rows_hint`` pass
+    document_service.py:386-466. ``norm_col`` and ``auth_rows_bound`` pass
     through to `score_chunks` and `scoped_chunks`.
     """
     auth_docs = authorized_documents(documents, auth, filters, system_filters, status_filter, compiler)
     candidates = score_chunks(
-        scoped_chunks(chunks, auth_docs, auth_rows_hint=auth_rows_hint), query_vector, embedding_col, norm_col
+        scoped_chunks(chunks, auth_docs, auth_rows_bound=auth_rows_bound), query_vector, embedding_col, norm_col
     )
     if reranker is None:
         return top_k(candidates, k, tiebreak=tiebreak)

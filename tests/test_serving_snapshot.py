@@ -133,6 +133,23 @@ def test_retrieve_sees_second_facade_write(spark, seeded):
     assert all(h["document_id"] != new_id for h in _top(other, text))
 
 
+def test_second_facade_never_adopts_a_stale_cached_frame(spark, seeded):
+    """Spark's cache is session-wide and matches a cached plan by its table
+    path, not by its file listing: a fresh facade's serving frame over the
+    same path must not pick up the first facade's cache of an older
+    snapshot. The updated document stays authorized, so only the cached
+    chunk rows could hide the change."""
+    client, ids = seeded
+    text = "quantum tunnelling through potential barriers"
+    client.update_document_text(ids[1], text)
+    other = _client(spark, client.root)
+    hit = _top(other, text)[0]
+    assert hit["document_id"] == ids[1] and hit["content"] == text
+    assert all("purr" not in h["content"] for h in _top(other, "cats purr felines"))
+    # and the first facade, whose own cache predates the update, agrees
+    assert _top(client, text)[0]["content"] == text
+
+
 def test_superseded_serving_frame_is_unpersisted(seeded):
     client, _ids = seeded
     old = client._serving_chunks()
@@ -180,6 +197,35 @@ def test_vector_literal_and_norm_match_the_jvm(spark):
     ).collect()[0]
     assert row.v == q
     assert row.n == vector_norm(q[:768])
+
+
+def test_row_bound_answers_only_small(spark):
+    """The documents-snapshot row count bounds the authorized set from
+    above: at or below the threshold it skips the probe, above it the
+    probe decides, so a small set in a large table still broadcasts."""
+    from morphik_core_spark.operators.retrieval import scoped_chunks
+
+    chunks = spark.createDataFrame([(i, i % 10) for i in range(200)], "chunk_id int, document_id int")
+    auth = spark.createDataFrame([(i,) for i in range(10)], "document_id int")
+    sc = spark.sparkContext
+
+    def plan_and_jobs(bound):
+        group = f"row-bound-{bound}"
+        sc.setJobGroup(group, group)
+        try:
+            plan = scoped_chunks(chunks, auth, broadcast_threshold=100, auth_rows_bound=bound)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        executed = plan._jdf.queryExecution().executedPlan().toString()
+        return executed, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    executed, jobs = plan_and_jobs(50)
+    assert "BroadcastHashJoin" in executed and jobs == 0
+    executed, jobs = plan_and_jobs(10_000)
+    assert "BroadcastHashJoin" in executed and jobs >= 1  # the probe ran
+    big = spark.createDataFrame([(i,) for i in range(150)], "document_id int")
+    executed = scoped_chunks(chunks, big, broadcast_threshold=100, auth_rows_bound=10_000)
+    assert "BroadcastHashJoin" not in executed._jdf.queryExecution().executedPlan().toString()
 
 
 # ---------------------------------------------------------- served rows
